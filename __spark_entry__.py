@@ -54,14 +54,8 @@ def entry(spark: SparkSession) -> DataFrame:
         ],
         comparisons=[
             pp.Comparison.exact("c_mktsegment"),
-            # Comparison.jw is the flagship CORRECTNESS default (round
-            # 9, per ADVICE): jw_approx's Levenshtein floor is an
-            # unsound bound — transposition-dense pairs with true
-            # JW > 0.85 could silently land on the default bucket
-            # under a corpus shift. jw_approx stays the documented
-            # opt-in for the 26M-pair hot path, where jw_prefilter's
-            # loss is measured per-corpus (it is zero on both test
-            # corpora); the flagship prefers the exact tier.
+            # Comparison.jw: the reference's Jaro-Winkler buckets,
+            # byte-exact with DuckDB's jaro_winkler_similarity.
             pp.Comparison.jw("c_name"),
             pp.Comparison.buckets(
                 "acctbal",

@@ -118,7 +118,6 @@ BENCH_QUERIES = [
     "comparison_vectors_scaled",
     "match_weight_scoring_scaled",
     "blocking_estimate_scaled",
-    "jw_sql_buckets",
     "jw_scaled_buckets",
     "blocking_pass_counts",
     "blocking_estimate",
@@ -139,7 +138,6 @@ BENCH_QUERIES = [
     "best_threshold",
     "key_skew_report",
     "jw_comparator_buckets",
-    "jw_approx_buckets",
     "comparison_vectors",
     "match_weight_scoring",
     "threshold_rank",

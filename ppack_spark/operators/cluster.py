@@ -34,8 +34,6 @@ plan but exact on fixture-sized inputs (plans/registry_data.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -51,9 +49,9 @@ from .util import cut_lineage
 # mandates, and far below any driver limit. Above the bound (any real
 # 100 TB dedup graph) the distributed kernels run exactly as before;
 # the decision input is the edge COUNT the star kernel already
-# computes for its convergence signature. Override with
-# PPACK_CC_DRIVER_MAX_EDGES (0 disables the driver path).
-_CC_DRIVER_MAX_EDGES = int(os.environ.get("PPACK_CC_DRIVER_MAX_EDGES", "200000"))
+# computes for its convergence signature. Override per call with
+# ``small_graph_edges=`` (0 disables the driver path).
+_CC_DRIVER_MAX_EDGES = 200_000
 
 __all__ = [
     "connected_components",
@@ -131,8 +129,8 @@ def connected_components(
     at least one edge are returned (singletons are their own component
     by definition and need no resolution).
 
-    ``small_graph_edges`` (default: the module bound, env
-    ``PPACK_CC_DRIVER_MAX_EDGES``; pass 0 to disable): edge sets at or
+    ``small_graph_edges`` (default: the module bound
+    ``_CC_DRIVER_MAX_EDGES``; pass 0 to disable): edge sets at or
     below the bound are solved with the driver union-find
     (:func:`_driver_components`) instead of distributed rounds —
     identical output, none of the per-round job overhead.

@@ -47,7 +47,6 @@ crawl-authority operators a 100 TB web-corpus build needs.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -65,12 +64,10 @@ from .util import cut_lineage, distributed_rank
 # BEFORE the loop (edge collapse, share division, seed normalization)
 # stays in Spark, so the driver path starts from identical numbers.
 # Same bounded-collect class as the CC kernels' union-find
-# (operators/cluster.py); override with PPACK_GRAPH_DRIVER_MAX_EDGES,
+# (operators/cluster.py); override per call with ``small_graph_edges=``,
 # 0 disables. Any 100 TB graph exceeds the bound and takes the
 # distributed loop unchanged.
-_GRAPH_DRIVER_MAX_EDGES = int(
-    os.environ.get("PPACK_GRAPH_DRIVER_MAX_EDGES", "200000")
-)
+_GRAPH_DRIVER_MAX_EDGES = 200_000
 
 
 def _driver_safe_node_type(df: DataFrame, col: str):

@@ -482,177 +482,6 @@ def levenshtein_comparator(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "jw_approx_buckets",
-    """
-    with pairs as (
-        select l.p_partkey as id_l, r.p_partkey as id_r,
-               l.p_name as ln, r.p_name as rn
-        from part l join part r
-          on l.p_brand = r.p_brand and l.p_partkey < r.p_partkey
-    ),
-    m as (
-        select id_l, id_r, ln, rn,
-               cast(least(length(ln), length(rn)) as double)
-                 / greatest(length(ln), length(rn)) as ab,
-               case when substr(ln,1,4) = substr(rn,1,4) then 4
-                    when substr(ln,1,3) = substr(rn,1,3) then 3
-                    when substr(ln,1,2) = substr(rn,1,2) then 2
-                    when substr(ln,1,1) = substr(rn,1,1) then 1
-                    else 0 end as pl,
-               1.0 - levenshtein(ln, rn)
-                       / cast(greatest(length(ln), length(rn)) as double) as lev
-        from pairs
-    ),
-    f as (
-        select id_l, id_r, ln, rn,
-               (ln <> rn)
-               and ((2.0 + ab) / 3.0
-                    + 0.1 * pl * (1.0 - (2.0 + ab) / 3.0) > 0.85)
-               and (lev >= 0.4) as ok
-        from m
-    )
-    select id_l as p_partkey_left, id_r as p_partkey_right,
-           coalesce(ok, false) as prefilter_pass,
-           case when ln = rn and length(ln) > 0 then 'full agreement'
-                when ok and jaro_winkler_similarity(ln, rn) > 0.9
-                     then 'strong partial agreement'
-                when ok and jaro_winkler_similarity(ln, rn) > 0.85
-                     then 'weak partial agreement'
-                else 'no agreement' end as name_bucket
-    from f
-    """,
-)
-def jw_approx_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Comparison.jw_approx (spec.py / similarity.py:jw_approx_comparator):
-    the JW bucket comparator behind the JVM prefilter — equal pairs
-    bucket without Python, pairs failing the sound length/prefix bound
-    or the conservative Levenshtein floor ship (NULL, NULL) through
-    Arrow and take the default bucket; only contenders reach the C
-    kernel. Gated on the brand-blocked part-name self-join (TPC-H part
-    names are permuted color words — the transposition-heavy case
-    where JW and Levenshtein diverge most, so the floor's
-    conservatism is actually exercised: ~75 % of these pairs skip the
-    kernel with zero bucket changes vs plain jw). The oracle replays
-    the prefilter arithmetic verbatim plus DuckDB's own
-    jaro_winkler_similarity.
-
-    The probe side is ``spread()`` first (round 9): part.parquet at
-    sf0.1 is one ~1 MB split, so the broadcast self-join and
-    EVERYTHING downstream — the 8M-pair Levenshtein prefilter and the
-    Arrow kernel — inherited a 1-2 core pin. The round-8 board read
-    this gate at 21 s and attributed it to the numpy JW kernel; the
-    measured decomposition at r9 is ~7 s single-threaded JVM
-    Levenshtein + ~4 s single-threaded kernel hop, and with the pair
-    set partitioned by cores the same plan runs in ~1.6 s. The
-    kernel was never the bottleneck — the parallelism was."""
-    from ..operators.util import spread
-    from ..similarity import jw_approx_comparator, jw_prefilter
-
-    part = t(spark, sf_dir, "part")
-    l = spread(part).select(
-        F.col("p_partkey").alias("p_partkey_left"),
-        F.col("p_brand").alias("__b"),
-        F.col("p_name").alias("p_name_left"),
-    )
-    r = part.select(
-        F.col("p_partkey").alias("p_partkey_right"),
-        F.col("p_brand").alias("__b"),
-        F.col("p_name").alias("p_name_right"),
-    )
-    pairs = l.join(r, "__b").filter(
-        F.col("p_partkey_left") < F.col("p_partkey_right")
-    )
-    return pairs.select(
-        "p_partkey_left",
-        "p_partkey_right",
-        F.coalesce(
-            jw_prefilter("p_name_left", "p_name_right"), F.lit(False)
-        ).alias("prefilter_pass"),
-        jw_approx_comparator(
-            "p_name", "p_name_left", "p_name_right"
-        ).alias("name_bucket"),
-    )
-
-
-@query(
-    "jw_sql_buckets",
-    """
-    with n as (select count(*) as n from customer),
-    sample_ids as (
-        select c_custkey as c_custkey_left,
-               (c_custkey * 37 + 11) % (select n from n) as c_custkey_right
-        from customer
-    ),
-    named as (
-        select p.c_custkey_left, p.c_custkey_right,
-               a.c_name as name_l, b.c_name as name_r
-        from sample_ids p
-        left join customer a on p.c_custkey_left = a.c_custkey
-        left join customer b on p.c_custkey_right = b.c_custkey
-    )
-    select c_custkey_left, c_custkey_right,
-           round(jaro_winkler_similarity(name_l, name_r), 6) as jw_sim,
-           case when jaro_winkler_similarity(name_l, name_r) = 1 then 'full agreement'
-                when jaro_winkler_similarity(name_l, name_r) > 0.9 then 'strong partial agreement'
-                when jaro_winkler_similarity(name_l, name_r) > 0.85 then 'weak partial agreement'
-                else 'no agreement' end as name_bucket
-    from named
-    """,
-)
-def jw_sql_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Comparison.jw_sql (similarity.py:jw_sql_similarity): the
-    reference's JW bucket comparator computed as a PURE Catalyst
-    expression — higher-order functions over the UTF-8 bytes, zero
-    Python anywhere in the plan (the registry-wide UDF sweep in
-    tests/test_plans.py sees this gate as clean with NO allowlist
-    entry, unlike the two Arrow tiers). Same deterministic modular
-    pair sample and same DuckDB jaro_winkler_similarity oracle as
-    `jw_comparator_buckets`, including the id-0 NULL row, so the two
-    tiers' green rows together pin bucket-identical behavior.
-
-    Two expression-placement lessons are load-bearing here (each was
-    a measured ~2× / ~10× on this gate): the similarity feeds BOTH
-    output columns through ONE ``inline(transform(array(sim), ...))``
-    generator — a Generate node evaluates its child once per row,
-    where two projection references would run the whole aggregate
-    twice (the Arrow tier gets this for free from UDF
-    deduplication) — and the pair set is ``spread()`` first, because
-    AQE coalesces the small sample join to one partition and a
-    compute-bound expression stage, unlike a byte-bound scan, must be
-    partitioned by CORES (operators/util.py:spread)."""
-    from ..operators.util import spread
-    from ..similarity import jw_sql_similarity
-
-    customer = t(spark, sf_dir, "customer")
-    n = customer.count()
-    sample = customer.select(
-        F.col("c_custkey").alias("c_custkey_left"),
-        ((F.col("c_custkey") * 37 + 11) % n).alias("c_custkey_right"),
-    )
-    joined = spread(
-        compute_pairs_dataset(customer, customer, "c_custkey", "c_custkey", sample)
-    )
-    sim = jw_sql_similarity(F.col("c_name_left"), F.col("c_name_right"))
-    return joined.select(
-        "c_custkey_left",
-        "c_custkey_right",
-        F.inline(
-            F.transform(
-                F.array(sim),
-                lambda s: F.struct(
-                    F.round(s, 6).alias("jw_sim"),
-                    F.when(s == 1.0, "full agreement")
-                    .when(s > 0.9, "strong partial agreement")
-                    .when(s > 0.85, "weak partial agreement")
-                    .otherwise("no agreement")
-                    .alias("name_bucket"),
-                ),
-            )
-        ),
-    )
-
-
 _SOUNDEX_FIXTURE = [
     # (pair_id, name_left, name_right, expected phonetic level)
     (0, "Robert", "Rupert", "agree"),
@@ -971,50 +800,23 @@ def match_weight_scoring_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pairs p
         left join customer a on p.c_custkey_left = a.c_custkey
         left join customer b on p.c_custkey_right = b.c_custkey
-    ),
-    m as (
-        select c_custkey_left, c_custkey_right, ln, rn,
-               cast(least(length(ln), length(rn)) as double)
-                 / greatest(length(ln), length(rn)) as ab,
-               case when substr(ln,1,4) = substr(rn,1,4) then 4
-                    when substr(ln,1,3) = substr(rn,1,3) then 3
-                    when substr(ln,1,2) = substr(rn,1,2) then 2
-                    when substr(ln,1,1) = substr(rn,1,1) then 1
-                    else 0 end as pl,
-               1.0 - levenshtein(ln, rn)
-                       / cast(greatest(length(ln), length(rn)) as double) as lev
-        from named
-    ),
-    f as (
-        select c_custkey_left, c_custkey_right, ln, rn,
-               (ln <> rn)
-               and ((2.0 + ab) / 3.0
-                    + 0.1 * pl * (1.0 - (2.0 + ab) / 3.0) > 0.85)
-               and (lev >= 0.4) as ok
-        from m
     )
     select c_custkey_left, c_custkey_right,
-           case when ln = rn and length(ln) > 0 then 'full agreement'
-                when ok and jaro_winkler_similarity(ln, rn) > 0.9
-                     then 'strong partial agreement'
-                when ok and jaro_winkler_similarity(ln, rn) > 0.85
-                     then 'weak partial agreement'
+           case when jaro_winkler_similarity(ln, rn) = 1 then 'full agreement'
+                when jaro_winkler_similarity(ln, rn) > 0.9 then 'strong partial agreement'
+                when jaro_winkler_similarity(ln, rn) > 0.85 then 'weak partial agreement'
                 else 'no agreement' end as name_bucket
-    from f
+    from named
     """,
 )
 def jw_scaled_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's signature JW comparator riding the LINEAR
-    blocking spec — the round-7 verdict's remaining JW ask
-    (demonstrate the chain at sf0.5+ under production blocking, not
-    just the brand-block quadratic): Comparison.jw_approx over the
-    truncated-name candidate pairs, whose ~14n pair budget keeps the
-    Arrow kernel's input volume linear in n. Scale rows to sf1 in
-    SCALE_r08.json (the nation/brand-blocked JW gates cap at
-    sf0.2-0.5 by QUAD contract). Oracle replays the prefilter
-    arithmetic and DuckDB's own jaro_winkler_similarity over the same
+    blocking spec: Comparison.jw over the truncated-name candidate
+    pairs, whose ~14n pair budget keeps the Arrow kernel's input
+    volume linear in n.
+    Oracle: DuckDB's own jaro_winkler_similarity bucketed over the same
     pair CTE as the other scaled gates."""
-    from ..similarity import jw_approx_comparator
+    from ..similarity import jw_comparator
 
     customer = t(spark, sf_dir, "customer")
     joined = compute_pairs_dataset(
@@ -1024,7 +826,7 @@ def jw_scaled_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.select(
         "c_custkey_left",
         "c_custkey_right",
-        jw_approx_comparator("c_name").alias("name_bucket"),
+        jw_comparator("c_name").alias("name_bucket"),
     )
 
 

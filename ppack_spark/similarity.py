@@ -2,35 +2,16 @@
 
 The reference relies on DuckDB's builtin ``jaro_winkler_similarity``
 (comparators.R:9-11). Spark has no JW builtin, so this module provides
-an Arrow-vectorized pandas UDF implementing the standard
-Jaro-Winkler measure (Winkler 1990): prefix scale 0.1, max prefix 4,
-boost threshold 0.7 — the same constants DuckDB uses, verified against
-its output in tests/test_similarity.py.
+one Jaro-Winkler: an Arrow-vectorized pandas UDF implementing the
+standard measure (Winkler 1990) with DuckDB's constants — prefix scale
+0.1, max prefix 4, boost threshold 0.7 — and DuckDB's byte semantics,
+verified against its output in tests/test_similarity.py.
 
-Inside each Arrow batch the residual (non-null, non-equal, non-empty)
-pairs are scored by the first fast implementation that exactly
-reproduces the pure-Python reference on a discriminating self-check
-corpus (``_JW_SELFCHECK``): rapidfuzz ``cpdist``, else jellyfish, else
-a numpy-vectorized kernel over padded byte matrices
-(``_numpy_jw_batch``) that is always available and bit-identical by
-construction. Each candidate is checked independently, so an
-importable-but-divergent library never masks a later exact one. At
-26M+ candidate pairs the vectorized path keeps the JW column from
-dominating the comparison stage.
-
-ENVIRONMENT NOTE (round 9, re-confirmed at rounds 10 and 11): neither
-``rapidfuzz`` nor ``jellyfish``
-is installed in this container, and installing packages is out of
-scope for this build environment (no network package installs) — the
-numpy kernel is the tier that actually runs here, exactly as the
-selection ladder intends. Measured honestly it is NOT the hot spot:
-the ``jw_approx_buckets`` gate's former 21 s decomposed into a 1-2
-core pin on an unspread probe side (~7 s single-threaded JVM
-Levenshtein + ~4 s single-threaded Arrow hop); with the pair set
-``spread()`` across cores the same plan runs ~1.6 s, kernel included
-(the kernel sustains ~375k pairs/s/core on 18-byte names at 10k-row
-Arrow batches). On a deployment where rapidfuzz IS installable, the
-ladder picks it up automatically and the self-check gates exactness.
+Inside each Arrow batch, NULL/empty/equal rows are resolved up front
+and the residual pairs are scored by a numpy kernel over padded byte
+matrices (``_numpy_jw_batch``) that replays the pure-Python reference
+``jaro_winkler_py`` bit for bit; pairs longer than 64 bytes go to that
+reference directly.
 
 UDF placement policy (SURVEY §7 risk register): similarity UDFs run
 strictly *post-blocking* over the candidate pairs — never inside a
@@ -53,8 +34,6 @@ __all__ = [
     "jaro_winkler_py",
     "jw_similarity",
     "jw_comparator",
-    "jw_sql_similarity",
-    "jw_sql_comparator",
     "levenshtein_similarity",
 ]
 
@@ -111,29 +90,6 @@ def jaro_winkler_py(s1: str | None, s2: str | None) -> float | None:
                 break
         jaro += prefix * 0.1 * (1.0 - jaro)
     return jaro
-
-
-# Pairs chosen to discriminate implementation variants: boost applied
-# below the 0.7 threshold, transposition counting, byte-vs-codepoint
-# unicode handling, prefix cap at 4.
-_JW_SELFCHECK = [
-    ("martha", "marhta"),
-    ("dwayne", "duane"),
-    ("dixon", "dicksonx"),
-    ("axxxxx", "ayyyyy"),  # common prefix but jaro <= 0.7: no boost
-    ("abcdefgh", "abcdxyzw"),  # prefix longer than the cap of 4
-    ("café", "cafe"),  # multi-byte UTF-8: DuckDB scores BYTES
-    ("über", "uber"),
-    ("ab", "ba"),
-    ("a", "b"),
-    ("abcde", "edcba"),
-]
-
-
-def _pyloop_jw_batch(sub_l: list, sub_r: list) -> list:
-    """Reference batch scorer: pure-Python JW per pair (exactness
-    reference; DuckDB byte semantics pinned in tests/test_similarity.py)."""
-    return [jaro_winkler_py(l, r) for l, r in zip(sub_l, sub_r)]
 
 
 # Pairs whose max byte length exceeds this go to the pure-Python loop
@@ -213,14 +169,14 @@ def _numpy_jw_kernel(L, R, len1, len2) -> np.ndarray:
 
 
 def _numpy_jw_batch(sub_l: list, sub_r: list) -> list:
-    """Vectorized batch JW (bytes pairs → list[float]) — the
-    always-available fast path when no exact C library is installed.
-    Pairs are bucketed by max byte length (≤8/16/32/64) to bound
-    padding waste; longer pairs fall back to the pure-Python loop."""
+    """Vectorized batch JW (bytes pairs → list[float]). Pairs are
+    bucketed by max byte length (≤8/16/32/64) to bound padding waste;
+    longer pairs fall back to ``jaro_winkler_py``. Pairs of two empty
+    strings fall in no bucket and keep 0.0 (DuckDB: empty → 0)."""
     n = len(sub_l)
     if n == 0:
         return []
-    out = np.empty(n, dtype=np.float64)
+    out = np.zeros(n, dtype=np.float64)
     len1 = np.fromiter(map(len, sub_l), dtype=np.int64, count=n)
     len2 = np.fromiter(map(len, sub_r), dtype=np.int64, count=n)
     mx = np.maximum(len1, len2)
@@ -255,68 +211,11 @@ def _numpy_jw_batch(sub_l: list, sub_r: list) -> list:
     return out.tolist()
 
 
-def _rapidfuzz_scorer():
-    from rapidfuzz.distance import JaroWinkler
-    from rapidfuzz.process import cpdist
-
-    def scorer(sub_l, sub_r):
-        try:
-            out = cpdist(sub_l, sub_r, scorer=JaroWinkler.similarity, dtype=np.float64)
-        except TypeError:  # older rapidfuzz without dtype kwarg
-            out = cpdist(sub_l, sub_r, scorer=JaroWinkler.similarity)
-        return np.asarray(out, dtype=np.float64).tolist()
-
-    return scorer
-
-
-def _jellyfish_scorer():
-    import jellyfish
-
-    def scorer(sub_l, sub_r):
-        return [
-            jellyfish.jaro_winkler_similarity(l.decode("latin-1"), r.decode("latin-1"))
-            for l, r in zip(sub_l, sub_r)
-        ]
-
-    return scorer
-
-
-def _load_fast_jw_batch():
-    """Return the first batch scorer (bytes pairs → list[float]) that
-    exactly reproduces ``jaro_winkler_py`` on the discriminating
-    self-check corpus. Candidates are tried INDEPENDENTLY in order —
-    rapidfuzz, jellyfish, then the numpy kernel — so an importable but
-    semantically divergent library (e.g. a rapidfuzz build that skips
-    the 0.7 boost threshold, or returns float32) is rejected without
-    masking a later exact candidate. The numpy kernel is deterministic
-    float64 replaying the reference expression order, so in practice
-    this never returns None; the gate still protects against a numpy
-    regression by falling back to the pure loop."""
-    check_l = [a.encode("utf-8") for a, _ in _JW_SELFCHECK]
-    check_r = [b.encode("utf-8") for _, b in _JW_SELFCHECK]
-    want = _pyloop_jw_batch(check_l, check_r)
-    for factory in (_rapidfuzz_scorer, _jellyfish_scorer, lambda: _numpy_jw_batch):
-        try:
-            scorer = factory()
-            got = scorer(check_l, check_r)
-        except Exception:
-            continue
-        if all(abs(g - w) <= 1e-12 for g, w in zip(got, want)):
-            return scorer
-    return None
-
-
-_FAST_JW_BATCH: list = []  # lazy one-element cache (None = checked, absent)
-
-
 def _jw_batch(l_arr, r_arr) -> np.ndarray:
     """Elementwise JW over two object arrays of str/None. NULL/empty/
     equal rows are resolved in Python (DuckDB edge semantics: empty →
     0.0 even for ''=='', equal → 1.0); the residual pairs go to the
-    verified C batch scorer when available, else the pure-Python loop."""
-    if not _FAST_JW_BATCH:
-        _FAST_JW_BATCH.append(_load_fast_jw_batch())
-    fast = _FAST_JW_BATCH[0]
+    numpy kernel."""
     n = len(l_arr)
     out = np.empty(n, dtype=object)
     sub_l: list = []
@@ -337,7 +236,7 @@ def _jw_batch(l_arr, r_arr) -> np.ndarray:
             sub_l.append(bl)
             sub_r.append(br)
     if sub_idx:
-        scores = (fast or _pyloop_jw_batch)(sub_l, sub_r)
+        scores = _numpy_jw_batch(sub_l, sub_r)
         for k, i in enumerate(sub_idx):
             out[i] = float(scores[k])
     return out
@@ -355,169 +254,6 @@ def jaro_winkler(left: Column | str, right: Column | str) -> Column:
     l = F.col(left) if isinstance(left, str) else left
     r = F.col(right) if isinstance(right, str) else right
     return jw_similarity(l, r)
-
-
-def jw_sql_similarity(left: Column | str, right: Column | str) -> Column:
-    """Jaro-Winkler as a PURE Catalyst expression — zero Python in the
-    plan — via higher-order functions over the UTF-8 bytes.
-
-    Bit-exact with :func:`jaro_winkler_py` (same greedy byte matching,
-    transposition floor-halving, 0.7 boost threshold, 4-byte prefix
-    cap, empty→0.0, NULL-propagating — pinned by
-    tests/test_similarity.py over unicode/empty/equal edges and random
-    pairs), hence DuckDB-compatible to the same 6 dp the oracle gates
-    check.
-
-    Shape: one ``aggregate`` over ``sequence(1, len(l))`` whose
-    accumulator carries the matched positions of both sides
-    (``m1``/``m2`` int arrays — NOT a boolean flags array, which would
-    cost an O(len) copy per step); each step scans only the Jaro
-    window with ``filter`` and binds the first unmatched hit ONCE
-    through a single-element ``transform`` (Catalyst does not CSE
-    inside lambda bodies — referencing the filter from two struct
-    fields re-runs the whole window scan). Transpositions come from
-    zipping ``m1``'s chars against ``array_sort(m2)``'s.
-
-    When to use which tier (bench-measured on the jw_*_buckets gates,
-    identical 15k-pair sample at sf0.1): the Arrow kernel
-    (:func:`jw_similarity`) is ~10× faster per CORE on 18-byte names
-    (~37 µs vs ~360 µs per pair — interpreted HOF lambda dispatch
-    dominates) and stays the default for throughput. This tier wins
-    operationally when Python workers are the constraint — no Arrow
-    hop, no Python worker memory, no PYSPARK_PYTHON on executors —
-    and it is the only tier legal inside join conditions or streaming
-    state predicates, since it is a plain expression rather than an
-    extracted ArrowEvalPython node (the UDF-placement policy in the
-    module docstring does not apply to it). Two placement rules when
-    consuming it: bind the result once (single-element ``transform``
-    let, or ``inline`` when fanning into several columns — Catalyst
-    re-evaluates multi-referenced non-cheap expressions), and
-    ``spread()`` compute-bound pair sets first (AQE coalesces small
-    shuffles by BYTES; this expression is bound by CPU).
-    """
-    l = F.col(left) if isinstance(left, str) else left
-    r = F.col(right) if isinstance(right, str) else right
-    # DuckDB (and jaro_winkler_py) score UTF-8 BYTES, not codepoints;
-    # substring()/length()/equality all operate bytewise on BinaryType
-    b1 = F.encode(l, "UTF-8")
-    b2 = F.encode(r, "UTF-8")
-    n1 = F.length(b1)
-    n2 = F.length(b2)
-    w = F.greatest((F.greatest(n1, n2) / 2).cast("int") - F.lit(1), F.lit(0))
-
-    def merge(acc, i):
-        c = F.substring(b1, i, 1)
-        lo = F.greatest(F.lit(1), i - w)
-        hi = F.least(n2, i + w)
-        # sequence(lo, hi) with lo > hi generates a DESCENDING range —
-        # guard the empty-window case explicitly
-        cand = F.when(
-            lo <= hi,
-            F.filter(
-                F.sequence(lo, hi),
-                lambda j: (F.substring(b2, j, 1) == c)
-                & ~F.array_contains(acc["m2"], j),
-            ),
-        ).otherwise(F.array().cast("array<int>"))
-        j0 = F.element_at(cand, 1)
-        return F.element_at(
-            F.transform(
-                F.array(j0),
-                lambda j: F.struct(
-                    F.when(j.isNotNull(), F.concat(acc["m1"], F.array(i)))
-                    .otherwise(acc["m1"])
-                    .alias("m1"),
-                    F.when(j.isNotNull(), F.concat(acc["m2"], F.array(j)))
-                    .otherwise(acc["m2"])
-                    .alias("m2"),
-                ),
-            ),
-            1,
-        )
-
-    def finish(acc):
-        m = F.size(acc["m1"])
-        m1c = F.transform(acc["m1"], lambda i: F.substring(b1, i, 1))
-        # greedy match js are NOT increasing in i (transposed pairs);
-        # s2's matched chars in s2 order = chars at sorted positions
-        m2c = F.transform(F.array_sort(acc["m2"]), lambda j: F.substring(b2, j, 1))
-        mis = F.size(
-            F.filter(
-                F.sequence(F.lit(1), m),
-                lambda k: F.element_at(m1c, k) != F.element_at(m2c, k),
-            )
-        )
-        t = F.floor(mis / 2).cast("double")
-        md = m.cast("double")
-        jaro = (
-            md / n1.cast("double") + md / n2.cast("double") + (md - t) / md
-        ) / F.lit(3.0)
-        pl = (
-            F.when(F.substring(b1, 1, 4) == F.substring(b2, 1, 4), 4)
-            .when(F.substring(b1, 1, 3) == F.substring(b2, 1, 3), 3)
-            .when(F.substring(b1, 1, 2) == F.substring(b2, 1, 2), 2)
-            .when(F.substring(b1, 1, 1) == F.substring(b2, 1, 1), 1)
-            .otherwise(0)
-        ).cast("double")
-        boosted = jaro + pl * F.lit(0.1) * (F.lit(1.0) - jaro)
-        return F.when(m == 0, F.lit(0.0)).otherwise(
-            F.when(jaro > 0.7, boosted).otherwise(jaro)
-        )
-
-    agg = F.aggregate(
-        F.sequence(F.lit(1), n1),
-        F.struct(
-            F.array().cast("array<int>").alias("m1"),
-            F.array().cast("array<int>").alias("m2"),
-        ),
-        merge,
-        finish,
-    )
-    return (
-        F.when(l.isNull() | r.isNull(), F.lit(None).cast("double"))
-        .when((n1 == 0) | (n2 == 0), F.lit(0.0))
-        .when(b1 == b2, F.lit(1.0))
-        .otherwise(agg)
-    )
-
-
-def jw_sql_comparator(
-    var: str,
-    left: Column | str | None = None,
-    right: Column | str | None = None,
-) -> Column:
-    """:func:`jw_comparator` buckets over :func:`jw_sql_similarity` —
-    the zero-Python tier of the reference's signature comparator
-    (comparators.R:4-14). Bucket-identical to the UDF tier on every
-    input (both kernels are bit-exact with jaro_winkler_py), with the
-    similarity computed as a plain Catalyst expression, so the whole
-    comparison stage runs without Python workers.
-
-    The similarity is bound ONCE through a single-element ``transform``
-    before the bucket CASE: the UDF tier leans on Spark deduplicating
-    equal ArrowEvalPython calls, but an expression referenced from
-    three CASE branches would re-run the aggregate per branch (HOFs
-    are codegen-fallback, outside subexpression elimination)."""
-    from .exprs import suffixed
-    from .spec import JW_LEVELS
-
-    l = F.col(suffixed(var, "_left")) if left is None else (
-        F.col(left) if isinstance(left, str) else left
-    )
-    r = F.col(suffixed(var, "_right")) if right is None else (
-        F.col(right) if isinstance(right, str) else right
-    )
-    full, strong, weak, none = JW_LEVELS
-    return F.element_at(
-        F.transform(
-            F.array(jw_sql_similarity(l, r)),
-            lambda s: F.when(s == 1.0, full)
-            .when(s > 0.9, strong)
-            .when(s > 0.85, weak)
-            .otherwise(none),
-        ),
-        1,
-    )
 
 
 def jw_comparator(
@@ -548,102 +284,6 @@ def jw_comparator(
         sim,
         [(sim == 1.0, full), (sim > 0.9, strong), (sim > 0.85, weak)],
         none,
-    )
-
-
-def jw_prefilter(
-    left: Column | str, right: Column | str, lev_floor: float = 0.4
-) -> Column:
-    """JVM-side "could this pair reach the > 0.85 JW bucket" screen —
-    TRUE only for pairs worth shipping to the Arrow-batched JW kernel.
-
-    Two tests, both codegen (zero Python):
-
-    * SOUND length/prefix bound: with a = min length, b = max length,
-      Jaro ≤ (2 + a/b)/3 (at most a characters can match) and the
-      Winkler bonus adds at most 0.1·pl·(1−J) for the actual common
-      prefix pl ≤ 4 — if that upper bound is ≤ 0.85 the pair
-      PROVABLY cannot reach the weak bucket.
-    * APPROXIMATE edit-distance floor: normalized Levenshtein
-      similarity < ``lev_floor`` → assume unreachable. This is not a
-      sound bound (transposition-dense pairs can hold JW > 0.85 with
-      lev ≈ 0.5 — Jaro forgives reordering that Levenshtein pays
-      double for), so the default floor is a conservative 0.4:
-      measured on the sf0.01 part-name pairs (word-permuted strings,
-      the adversarial case) it skips 75 % of pairs with ZERO bucket
-      changes, and on customer-name pairs it is lossless by a 0.33
-      margin. Raise it only after measuring on your own pair
-      distribution.
-
-    Equal pairs return FALSE — the caller's equality branch already
-    bucketed them, so the kernel should not see them either. Either
-    side NULL → NULL (callers' CASE semantics send those to the
-    default bucket).
-    """
-    l = F.col(left) if isinstance(left, str) else left
-    r = F.col(right) if isinstance(right, str) else right
-    a = F.least(F.length(l), F.length(r))
-    b = F.greatest(F.length(l), F.length(r))
-    ab = a / b.cast("double")
-    pl = (
-        F.when(F.substring(l, 1, 4) == F.substring(r, 1, 4), 4)
-        .when(F.substring(l, 1, 3) == F.substring(r, 1, 3), 3)
-        .when(F.substring(l, 1, 2) == F.substring(r, 1, 2), 2)
-        .when(F.substring(l, 1, 1) == F.substring(r, 1, 1), 1)
-        .otherwise(0)
-    )
-    j_ub = (F.lit(2.0) + ab) / F.lit(3.0)
-    jw_ub = j_ub + F.lit(0.1) * pl * (F.lit(1.0) - j_ub)
-    return (
-        (l != r)
-        & (jw_ub > 0.85)
-        & (levenshtein_similarity(l, r) >= F.lit(float(lev_floor)))
-    )
-
-
-def jw_approx_comparator(
-    var: str,
-    left: Column | str | None = None,
-    right: Column | str | None = None,
-    lev_floor: float = 0.4,
-) -> Column:
-    """:func:`jw_comparator` with the Python kernel behind a JVM
-    prefilter — the scale tier for the 26M-pair budget, where the
-    serialize→score→deserialize Arrow hop is the chain's dominant
-    avoidable cost (SURVEY §4).
-
-    A Python UDF inside a CASE branch does NOT evaluate lazily —
-    Spark extracts it into an unconditional ArrowEvalPython node — so
-    the filtering is done on the UDF's INPUTS: pairs failing
-    :func:`jw_prefilter` ship (NULL, NULL) through Arrow (validity
-    bits only, and the batch kernel skips non-strings in C) and land
-    on the default bucket. Equal non-empty pairs take ``full`` without
-    touching Python at all; the ``== 1.0`` bucket needs no kernel
-    because JW = 1 iff the strings are identical.
-
-    Semantics vs :func:`jw_comparator`: identical on every pair the
-    prefilter passes, and identical on NULL/empty/equal edges; pairs
-    the approximate floor skips get the default bucket even if their
-    true JW exceeds 0.85 (see jw_prefilter on why the default floor
-    makes that set empty on both test corpora).
-    """
-    from .exprs import suffixed
-    from .spec import JW_LEVELS
-
-    l = F.col(suffixed(var, "_left")) if left is None else (
-        F.col(left) if isinstance(left, str) else left
-    )
-    r = F.col(suffixed(var, "_right")) if right is None else (
-        F.col(right) if isinstance(right, str) else right
-    )
-    ok = jw_prefilter(l, r, lev_floor)
-    sim = jw_similarity(F.when(ok, l), F.when(ok, r))
-    full, strong, weak, none = JW_LEVELS
-    return (
-        F.when((l == r) & (F.length(l) > 0), full)
-        .when(sim > 0.9, strong)
-        .when(sim > 0.85, weak)
-        .otherwise(none)
     )
 
 

@@ -84,57 +84,15 @@ class Comparison:
     @staticmethod
     def jw(var: str, left: str | None = None, right: str | None = None) -> "Comparison":
         """The reference's signature comparator (comparators.R:4-14):
-        Jaro-Winkler buckets over ``var``; Arrow-vectorized UDF applied
-        strictly post-blocking (SURVEY §7 UDF-placement policy)."""
+        Jaro-Winkler buckets over ``var``, scored by the Arrow pandas
+        UDF over the numpy kernel (similarity.jw_comparator, the one
+        JW implementation) strictly post-blocking (SURVEY §7
+        UDF-placement policy)."""
         from .similarity import jw_comparator
 
         return Comparison(
             name=var,
             expression=jw_comparator(var, left, right),
-            levels=tuple(JW_LEVELS),
-        )
-
-    @staticmethod
-    def jw_approx(
-        var: str,
-        left: str | None = None,
-        right: str | None = None,
-        lev_floor: float = 0.4,
-    ) -> "Comparison":
-        """:meth:`jw` behind a JVM prefilter (similarity.jw_prefilter):
-        equal pairs bucket without Python, pairs that provably or
-        probably cannot reach the 0.85 bucket ship NULLs through
-        Arrow, only contenders reach the C kernel — the scale tier
-        when the pair budget makes the Arrow hop the dominant cost.
-        Bucket-identical to :meth:`jw` except for pairs skipped by the
-        approximate Levenshtein floor (empty at the default floor on
-        both test corpora — see jw_prefilter)."""
-        from .similarity import jw_approx_comparator
-
-        return Comparison(
-            name=var,
-            expression=jw_approx_comparator(var, left, right, lev_floor),
-            levels=tuple(JW_LEVELS),
-        )
-
-    @staticmethod
-    def jw_sql(
-        var: str, left: str | None = None, right: str | None = None
-    ) -> "Comparison":
-        """:meth:`jw` with the similarity computed as a pure Catalyst
-        expression (similarity.jw_sql_similarity) — bucket-identical
-        to the UDF tier (both kernels are bit-exact with
-        jaro_winkler_py) with ZERO Python in the plan: no Arrow hop,
-        no Python workers on executors, and legal inside join
-        conditions where an extracted ArrowEvalPython node is not.
-        ~10× slower per core than the Arrow kernel on short names
-        (bench-measured on the twin gates); choose it when
-        Python-worker cost or placement beats per-pair throughput."""
-        from .similarity import jw_sql_comparator
-
-        return Comparison(
-            name=var,
-            expression=jw_sql_comparator(var, left, right),
             levels=tuple(JW_LEVELS),
         )
 

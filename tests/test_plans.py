@@ -352,7 +352,7 @@ def test_registry_wide_plan_invariants(spark, tables, queries):
     only for those tiny builds)."""
     allowed_pandas_udf = {
         # JW similarity: Arrow-batched, post-blocking by construction
-        "jw_comparator_buckets", "comparison_vectors",
+        "jw_comparator_buckets", "jw_scaled_buckets", "comparison_vectors",
         "match_weight_scoring", "threshold_rank", "threshold_topk",
         "posterior_probability", "calibration_curve", "calibration_glm",
         "linkage_em_params", "linkage_em_end_to_end", "pattern_counts",
@@ -360,8 +360,6 @@ def test_registry_wide_plan_invariants(spark, tables, queries):
         # PQ encode/ADC scan: Arrow-batched by design
         "ann_pq_topk", "ann_ivfpq_topk",
         "ann_pq_topk_scan", "ann_ivfpq_topk_scan",
-        # JW approx tier: prefilter feeds the same Arrow kernel
-        "jw_approx_buckets", "jw_scaled_buckets",
         # Misra-Gries summary pass: Arrow-batched by design — the
         # bounded-memory candidate sweep IS the operator (E145); the
         # exact recount that follows is pure codegen
@@ -389,7 +387,8 @@ def test_plan_cost_report_census(spark, tables, queries):
     """The pre-flight plan census reports the shapes the plan tests
     assert individually: a zero-shuffle map pass shows 0 shuffles, a
     broadcast-join sampler shows a broadcast and no cartesian, and the
-    linkage chain shows its shuffles without any Python UDF rows."""
+    multi-pass blocking union has no pair-distinct shuffle or aggregate
+    (its passes are disjoint by construction) and no Python UDF rows."""
     from ppack_spark.operators.util import plan_cost_report
 
     flags = plan_cost_report(queries["quality_filter_flags"](spark, SF_DIR))
@@ -398,8 +397,11 @@ def test_plan_cost_report_census(spark, tables, queries):
     mix = plan_cost_report(queries["temperature_mix"](spark, SF_DIR))
     assert mix["n_broadcasts"] >= 1 and not mix["has_cartesian"]
 
-    blocking = plan_cost_report(queries["blocking_multi_pass"](spark, SF_DIR))
-    assert blocking["n_shuffles"] >= 1
+    blocking_df = queries["blocking_multi_pass"](spark, SF_DIR)
+    blocking = plan_cost_report(blocking_df)
+    plan = _plan(blocking_df)
+    assert "hashpartitioning(c_custkey_left" not in plan
+    assert "HashAggregate" not in plan
     assert not blocking["has_python_udf"]
     assert blocking["n_scans"] >= 1
 

@@ -52,7 +52,6 @@ QUERIES = [
     "comparison_vectors",
     "match_weight_scoring",
     "threshold_topk",
-    "jw_approx_buckets",       # brand blocks, also quadratic
     # round-8 scaled linkage chain: LINEAR blocking spec (truncated-
     # name passes, ~constant block sizes) picked via the estimator —
     # the r7 verdict's item 2 demonstration; no QUAD_CAP, runs to sf1
@@ -61,7 +60,6 @@ QUERIES = [
     "match_weight_scoring_scaled",
     "blocking_estimate_scaled",
     "jw_scaled_buckets",
-    "jw_sql_buckets",
     # round-9: the A-B linkage path (customer x supplier) — the only
     # headline chains with no SCALE rows before r9 (verdict item 5).
     # The nation/region-blocked originals are quadratic-by-contract
@@ -201,7 +199,6 @@ QUAD_CAP = {
     "comparison_vectors": 0.2,
     "match_weight_scoring": 0.2,
     "threshold_topk": 0.2,
-    "jw_approx_buckets": 0.2,  # 200M brand-block pairs at sf0.5
     # A-B originals: nation blocks ~n²/25, region+band ~n²/5
     "two_dataset_linkage": 0.2,
     "linkage_ab_clusters": 0.2,
